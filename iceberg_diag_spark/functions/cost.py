@@ -29,8 +29,3 @@ CONTENT_EQUALITY_DELETES = 2
 def read_file_cost(size: Column) -> Column:
     """Cost units to read one file: ``size DIV 32MiB + 2``."""
     return (size.cast("long") / F.lit(FETCH_SIZE)).cast("long") + F.lit(2)
-
-
-def scan_overhead_ms(size: Column) -> Column:
-    """Per-file scan overhead in milliseconds."""
-    return read_file_cost(size) * F.lit(MILLISECONDS_PER_SCAN)

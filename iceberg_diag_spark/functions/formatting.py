@@ -1,71 +1,59 @@
-"""Human-readable formatting as pure column expressions (SURVEY §2
-F1-F3; reference: icebergdiag/metrics/table_metric.py:62-65,134-176).
+"""Human-readable formatting as SQL text (SURVEY §2 F1-F3; reference:
+icebergdiag/metrics/table_metric.py:62-65,134-176).
 
 These are display-layer concerns, but implemented as JVM expressions
-(when-ladders over log-scaled units) rather than Python UDFs so a
+(CASE ladders over log-scaled units) rather than Python UDFs so a
 formatted export of a billion-row result is still a codegen'd scan.
+Each helper maps the SQL text of a numeric expression to the SQL text
+of its formatted string — use it through ``F.expr`` / ``selectExpr``.
+The argument is interpolated verbatim: pass trusted identifiers only.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, functions as F
-
 _SIZE_UNITS = ["B", "KB", "MB", "GB", "TB", "PB"]
 
 
-def format_size(size: Column) -> Column:
+def format_size(size: str) -> str:
     """bytes → '1.21 KB' (÷1024 ladder, 2 decimals, B..PB).
 
     Mirrors table_metric.py:164-176: unit advances while size >= 1024
     and a larger unit exists, i.e. PB is the terminal unit.
     """
-    expr = None
-    for i, unit in enumerate(_SIZE_UNITS):
-        scaled_i = size.cast("double") / (1024.0 ** i)
-        cond = scaled_i < 1024.0
-        value = F.format_string(f"%.2f {unit}", scaled_i)
-        if i == len(_SIZE_UNITS) - 1:
-            # terminal unit — no further division regardless of size
-            expr = expr.otherwise(value)
-        elif expr is None:
-            expr = F.when(cond, value)
-        else:
-            expr = expr.when(cond, value)
-    return expr
+    scaled = [f"CAST({size} AS DOUBLE) / {1024.0 ** i!r}D" for i in range(6)]
+    steps = [f"format_string('%.2f {u}', {v})" for u, v in zip(_SIZE_UNITS, scaled)]
+    whens = "".join(
+        f" WHEN {v} < 1024D THEN {step}" for v, step in zip(scaled[:-1], steps)
+    )
+    # terminal unit — no further division regardless of size
+    return f"CASE{whens} ELSE {steps[-1]} END"
 
 
-def format_duration_ms(ms: Column) -> Column:
+def format_duration_ms(ms: str) -> str:
     """milliseconds → '1h 0m 0s' / '2m 5s' / '5.5s' / '<0.01s'
     (table_metric.py:134-150, including trailing-zero stripping on
     the seconds-only form)."""
-    total_seconds = ms.cast("double") / 1000.0
-    hours = F.floor(total_seconds / 3600).cast("long")
-    minutes = F.floor((total_seconds % 3600) / 60).cast("long")
-    seconds = total_seconds % 60
-    secs_str = F.regexp_replace(
-        F.regexp_replace(F.format_string("%.2f", seconds), r"0+$", ""),
-        r"\.$",
-        "",
+    total = f"(CAST({ms} AS DOUBLE) / 1000D)"
+    hours = f"FLOOR({total} / 3600)"
+    minutes = f"FLOOR(({total} % 3600) / 60)"
+    secs = f"({total} % 60)"
+    secs_str = (
+        f"regexp_replace(regexp_replace(format_string('%.2f', {secs}),"
+        " '0+$', ''), '[.]$', '')"
     )
     return (
-        F.when(
-            hours > 0,
-            F.format_string(
-                "%dh %dm %ds", hours, minutes, F.floor(seconds).cast("long")
-            ),
-        )
-        .when(
-            minutes > 0,
-            F.format_string("%dm %ds", minutes, F.floor(seconds).cast("long")),
-        )
-        .when((seconds > 0) & (seconds < 0.01), F.lit("<0.01s"))
-        .otherwise(F.concat(secs_str, F.lit("s")))
+        f"CASE WHEN {hours} > 0"
+        f" THEN format_string('%dh %dm %ds', {hours}, {minutes}, FLOOR({secs}))"
+        f" WHEN {minutes} > 0"
+        f" THEN format_string('%dm %ds', {minutes}, FLOOR({secs}))"
+        f" WHEN {secs} > 0 AND {secs} < 0.01D THEN '<0.01s'"
+        f" ELSE concat({secs_str}, 's') END"
     )
 
 
-def format_percent(x: Column) -> Column:
+def format_percent(x: str) -> str:
     """float → '12.34%' (table_metric.py:62-65)."""
-    return F.format_string("%.2f%%", x.cast("double"))
+    return f"format_string('%.2f%%', CAST({x} AS DOUBLE))"
 
 
 def glob_to_regex(pattern: str) -> str:

@@ -9,21 +9,22 @@ closed group slightly exceeds the 750 MiB cap. The reset depends on
 where the previous group closed, which makes it a sequential stateful
 fold — not expressible with window prefix sums.
 
-Spark mapping: grouped-map ``applyInPandas`` keyed by partition.
-Sequential per group, parallel across partitions. At 100 TB the input
-here is *metadata* scale (one row per data file — millions of rows,
-KBs per partition group), so a per-group pandas fold is cheap and the
-shuffle is keyed by partition value with map-side combine upstream.
-The output is one row per (partition, group) — already aggregated, so
-no large pandas frames are returned.
+Spark mapping, two forms:
+- ``pack_fold_sql`` (the diagnostics panel): the partition's hash
+  aggregate buffers its DATA sizes as one sorted array and the SQL
+  ``aggregate()`` higher-order function folds it to (groups, cost) —
+  no Python worker, no per-group rows. At 100 TB the input is
+  *metadata* scale (one row per data file), so one partition's buffer
+  is a list of longs, boxed in the JVM: ~16-24 MB per 10^6 files.
+- ``binpack_groups``: grouped-map ``applyInPandas`` keyed by
+  partition, for callers that need one row per (partition, group).
 
 Parallelism caveat (inherent to the reference's per-partition fold):
-task parallelism equals the number of distinct partition values, so
-an UNPARTITIONED table folds in one task. That task is still only
-O(n log n) over that table's file-count metadata (pack_group_stats
-makes the aggregate form O(#groups log n)); a table whose *file
-count* alone is too large for one task has bigger problems than this
-fold.
+both forms fold one partition in one task, so an UNPARTITIONED table
+folds in one task. That task is O(n log n) over the table's
+file-count metadata (sort + one pass); a table whose *file count*
+alone is too large for one task's aggregate buffer has bigger
+problems than this fold.
 """
 
 from __future__ import annotations
@@ -33,7 +34,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from iceberg_diag_spark.functions.cost import MAX_GROUP_BYTE_SIZE
+from iceberg_diag_spark.functions.cost import FETCH_SIZE, MAX_GROUP_BYTE_SIZE
 
 GROUPS_SCHEMA = (
     "partition_key string, group_id long, group_file_count long, group_size long"
@@ -41,8 +42,8 @@ GROUPS_SCHEMA = (
 
 
 def pack_sizes(sizes, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE):
-    """Pure-python reference fold used inside the pandas UDF and in
-    property tests. Returns list of (count, total_size) per group.
+    """Pure-python reference fold, the oracle of the property tests.
+    Returns list of (count, total_size) per group.
 
     Mirrors check-before-append semantics exactly.
     """
@@ -61,36 +62,26 @@ def pack_sizes(sizes, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE):
     return groups
 
 
-def pack_group_stats(sizes, max_bytes_per_group: int = MAX_GROUP_BYTE_SIZE):
-    """Vectorized aggregate form of the fold: (n_groups,
-    sum-of-group read costs) without materializing per-group rows —
-    O(#groups · log n) via prefix sums + searchsorted. Used by the
-    fused diagnostics pass; property-tested equal to pack_sizes.
+def pack_fold_sql(sizes: str) -> str:
+    """SQL text folding an ascending array<bigint> of sizes to
+    ``struct<groups bigint, cost bigint>``: the number of packed
+    groups and the sum of their read costs (``total DIV FETCH + 2``),
+    exactly ``pack_sizes``' result at the 750 MiB cap in aggregate
+    form. State (g, c, t): closed groups, their cost, the open group's
+    total; an empty array packs to (0, 0).
 
-    A group starting at index s with base = P(s-1) ends at the FIRST
-    index e where P(e) - base > cap (check-before-append includes the
-    crossing row), or at the last row when no crossing remains.
+    ``sizes`` is interpolated verbatim: pass trusted identifiers only.
     """
-    from iceberg_diag_spark.functions.cost import FETCH_SIZE
-
-    data = np.sort(np.asarray(sizes, dtype="int64"))
-    n = int(data.size)
-    groups = 0
-    cost = 0
-    if n:
-        ps = np.cumsum(data)
-        base = 0
-        start = 0
-        while start < n:
-            e = int(np.searchsorted(ps, base + max_bytes_per_group, side="right"))
-            if e >= n:
-                e = n - 1
-            total = int(ps[e]) - base
-            cost += total // FETCH_SIZE + 2
-            groups += 1
-            base = int(ps[e])
-            start = e + 1
-    return groups, cost
+    cap, fetch = MAX_GROUP_BYTE_SIZE, FETCH_SIZE
+    return (
+        f"aggregate({sizes}, named_struct('g', 0L, 'c', 0L, 't', 0L), (a, s) ->"
+        f" IF(a.t > {cap}, named_struct('g', a.g + 1,"
+        f" 'c', a.c + a.t div {fetch} + 2, 't', s),"
+        f" named_struct('g', a.g, 'c', a.c, 't', a.t + s)),"
+        f" a -> IF(size({sizes}) > 0, named_struct('groups', a.g + 1,"
+        f" 'cost', a.c + a.t div {fetch} + 2),"
+        f" named_struct('groups', 0L, 'cost', 0L)))"
+    )
 
 
 def binpack_groups(

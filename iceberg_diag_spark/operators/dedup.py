@@ -24,6 +24,11 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from iceberg_diag_spark.functions.parallel import ensure_parallelism
 
+# MinHash signature width shared by every operator that builds or
+# bands signatures: a precomputed ``wide`` relation only matches
+# minhash_candidate_pairs' banding layout at the same width.
+DEFAULT_NUM_HASHES = 16
+
 
 def normalized_text(col: Column) -> Column:
     """Canonical text form shared by all dedup ops: lowercase, trim,
@@ -190,7 +195,7 @@ def minhash_signatures_wide(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = DEFAULT_NUM_HASHES,
     ngram: int = 3,
 ) -> DataFrame:
     """Per-document MinHash signature, one column per seed, via the
@@ -217,7 +222,7 @@ def minhash_signatures(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = DEFAULT_NUM_HASHES,
     ngram: int = 3,
 ) -> DataFrame:
     """Long-form signature view (doc_id, seed, minhash) — an unpivot
@@ -238,7 +243,7 @@ def _hash_sig_wide(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = DEFAULT_NUM_HASHES,
     ngram: int = 3,
 ) -> DataFrame:
     """ONE text scan → (id_col, __ch, h0..h{n-1}): the normalized
@@ -297,7 +302,7 @@ def _fused_wide_and_marks(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = DEFAULT_NUM_HASHES,
     ngram: int = 3,
 ) -> tuple[DataFrame, DataFrame]:
     """(wide signature, exact-dup marks) carved off ONE checkpointed
@@ -308,8 +313,6 @@ def _fused_wide_and_marks(
     minhash_signatures_wide never emits them; `marked` is the
     content_rep_marks window over the fused (id, __ch), checkpointed
     because every consumer reads it at least twice (star + keep)."""
-    from pyspark.sql import Window
-
     fused = _hash_sig_wide(
         docs, text_col, id_col, num_hashes, ngram
     ).localCheckpoint(eager=False)
@@ -338,7 +341,7 @@ def minhash_band_keys(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = 4,
     ngram: int = 3,
     wide: DataFrame | None = None,
@@ -406,7 +409,7 @@ def minhash_candidate_pairs(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = 4,
     ngram: int = 3,
     collapse_exact: bool = True,
@@ -997,14 +1000,17 @@ def _simhash_from_tokens(toks: DataFrame, key_col: str) -> DataFrame:
 # wall-clock constructing the plan than executing it (measured
 # 1.73 s → 0.24 s for the fused pass's construction alone; bench
 # times build+collect, and planning is serial driver work at any
-# scale — guide §7.3).
+# scale — guide §7.3). Column names are interpolated verbatim into
+# the SQL text, so every helper takes trusted (internal) identifiers
+# only — never a user-derived name.
 _MOD32 = 4294967296
 
 
 def _md5_halves_exprs(src: str, hi: str, lo: str) -> list[Column]:
     """(hi, lo) 32-bit halves of md5(src) as BIGINTs — the
     Carter-Wegman / SimHash shared hash-family construction
-    (cross-engine: '0x'||substr parses identically in DuckDB)."""
+    (cross-engine: '0x'||substr parses identically in DuckDB).
+    ``src`` is interpolated into SQL text: trusted identifiers only."""
     return [
         F.expr(
             f"CAST(conv(substring(md5({src}), 1, 8), 16, 10) AS BIGINT)"
@@ -1019,7 +1025,8 @@ def _minhash_agg_exprs(
     num_hashes: int, g1: str = "g1", g2: str = "g2"
 ) -> list[Column]:
     """The num_hashes Carter-Wegman min-aggregates
-    min((h1 + s·h2) mod 2^32) as h0..h{n-1}."""
+    min((h1 + s·h2) mod 2^32) as h0..h{n-1}. ``g1``/``g2`` are
+    interpolated into SQL text: trusted identifiers only."""
     return [
         F.expr(f"min(({g1} + {s} * {g2}) % {_MOD32})").alias(f"h{s}")
         for s in range(num_hashes)
@@ -1032,7 +1039,9 @@ def _vote_agg_cols(hi_col: str, lo_col: str) -> list[Column]:
     half in the low 32 bits of packed sum j, bit j of the high half —
     fingerprint bit j+32 — in the high 32). Σ (bit_j + bit_{j+32}·2^32)
     — branch-free. Shared by _simhash_from_tokens and the fused
-    signature+votes pass so the vote arithmetic lives in one place."""
+    signature+votes pass so the vote arithmetic lives in one place.
+    The column names are interpolated into SQL text: trusted
+    identifiers only."""
     cols = [F.expr("count(1)").alias("n_toks")]
     for j in range(32):
         cols.append(
@@ -1049,7 +1058,8 @@ def _fingerprint_sql() -> str:
     """The signed 64-bit SimHash fingerprint from the packed vote
     columns p0..p31 + n_toks (the _vote_agg_cols output) as ONE SQL
     expression string: -2^63·bit63 + Σ 2^b·bit_b,
-    bit_b = (2·cnt_b > n_toks)."""
+    bit_b = (2·cnt_b > n_toks). Reads fixed internal column names
+    only."""
     terms = []
     for b in range(64):
         cnt = (
@@ -1069,7 +1079,7 @@ def _sig_votes_fused(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = DEFAULT_NUM_HASHES,
     ngram: int = 3,
     minhash: bool = True,
 ) -> DataFrame:
@@ -1983,7 +1993,7 @@ def dedup_method_agreement(
     # pytest-pinned); per-position rows feed the MinHash
     # min-aggregates (gram at the position) and the SimHash vote
     # sums (token at the position) in the same grouped aggregate.
-    num_hashes = 16
+    num_hashes = DEFAULT_NUM_HASHES
     fused = _sig_votes_fused(
         docs, text_col, id_col, num_hashes=num_hashes
     ).localCheckpoint(eager=False)
@@ -2147,7 +2157,7 @@ def lsh_near_dup_tuned(
     recall_floor_ppm: int = 950_000,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = DEFAULT_NUM_HASHES,
     ngram: int = 3,
 ) -> DataFrame:
     """Advisor-EXECUTING banding — closes the lsh_param_advisor loop
@@ -2348,7 +2358,7 @@ def minhash_estimator_audit(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 16,
+    num_hashes: int = DEFAULT_NUM_HASHES,
     ngram: int = 3,
 ) -> DataFrame:
     """Estimator-calibration audit for the MinHash pipeline: for every

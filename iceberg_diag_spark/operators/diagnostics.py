@@ -1,26 +1,30 @@
 """Iceberg table-diagnostics metrics as a Spark DataFrame pipeline.
 
 Re-expresses the reference aggregation engine
-(``icebergdiag/metrics/table_metrics.py:46-155``) Spark-first:
+(``icebergdiag/metrics/table_metrics.py:46-155``) Spark-first, with no
+Python on the executors:
 
-  files ──one exchange──► fused applyInPandas: BEFORE stats +
-         bin-pack + AFTER stats, one row per partition   (A1, A8/A9)
+  files ──one exchange──► hash aggregate per partition: BEFORE stats
+         + sorted DATA sizes ──► SQL aggregate() bin-pack fold (A1, A8/A9)
   ──single agg──► all 9 global metrics                   (A2-A7, A10)
-  unpivot ──► 9-row metric table with improvement        (A11)
+  unpivot (inline) ──► 9-row metric table with improvement  (A11)
 
 Scale notes (100 TB):
 - The input relation is Iceberg *metadata* (one row per data file):
   even a 100 TB table is ~1e6-1e8 rows — comfortably shuffle-able.
-  Both groupBys shuffle on the same key (partition value), and AQE
-  coalesces the tiny post-agg exchanges.
+  Both aggregates are keyed by the partition value (or its table), and
+  AQE coalesces the tiny post-agg exchanges.
 - Per-partition stats are one row per partition; the final global agg
-  is a single reduce — no driver-side loops, no collect_list of sizes
-  (the pandas fold streams each group's rows once and emits
-  per-group aggregates, not file lists).
-- The only Python is the sequential bin-pack fold (see binpack.py).
+  is a single reduce — no driver-side loops. The one list buffered is
+  each partition's DATA file sizes (metadata scale, boxed longs:
+  ~16-24 MB per 10^6 files), folded in place by ``pack_fold_sql``.
+- The plan is built from SQL text (``selectExpr`` / ``F.expr``), a few
+  py4j calls per panel instead of thousands of Column builders.
 
 Metric semantics pinned by tests/test_diagnostics_golden.py, derived
 from the reference unit test (tests/test_metric_calculator.py:46-91).
+All SQL-text builders here interpolate column names verbatim: they
+take trusted identifiers only.
 """
 
 from __future__ import annotations
@@ -30,11 +34,9 @@ from pyspark.sql import DataFrame, functions as F
 from iceberg_diag_spark.functions.cost import (
     CONTENT_DATA,
     FETCH_SIZE,
-    MAX_GROUP_BYTE_SIZE,
     MILLISECONDS_PER_SCAN,
-    scan_overhead_ms,
 )
-from iceberg_diag_spark.operators.binpack import pack_group_stats
+from iceberg_diag_spark.operators.binpack import pack_fold_sql
 
 # Display order + reference display names (table_metric.py:9-18).
 METRICS = [
@@ -49,6 +51,22 @@ METRICS = [
     ("TOTAL_PARTITIONS", "Total Partitions"),
 ]
 
+_MS = MILLISECONDS_PER_SCAN
+
+
+def _before_sql(size: str, content: str) -> list[str]:
+    """BEFORE aggregates per partition (table_metrics.py:56-74):
+    counts/sizes/overhead include ALL content kinds; data_* are
+    DATA-only (content == 0)."""
+    data = f"{content} = {CONTENT_DATA}"
+    return [
+        "count(*) AS file_count",
+        f"sum({size}) AS total_size",
+        f"sum({size} div {FETCH_SIZE} + 2) * {_MS} AS scan_overhead",
+        f"sum(IF({data}, 1, 0)) AS data_file_count",
+        f"coalesce(sum(IF({data}, {size}, NULL)), 0) AS data_size",
+    ]
+
 
 def partition_stats(
     files: DataFrame,
@@ -59,26 +77,11 @@ def partition_stats(
     """Per-partition BEFORE aggregates — one shuffle, map-side combine.
 
     Columns out: partition_key, file_count, total_size, scan_overhead,
-    data_file_count, data_size. Matches the reference single-pass
-    accumulator (table_metrics.py:56-74): counts/sizes/overhead include
-    ALL content kinds; data_* are DATA-only (content == 0).
+    data_file_count, data_size.
     """
-    size = F.col(size_col)
-    is_data = F.col(content_col) == CONTENT_DATA
     return files.groupBy(F.col(partition_col).alias("partition_key")).agg(
-        F.count("*").alias("file_count"),
-        F.sum(size).alias("total_size"),
-        F.sum(scan_overhead_ms(size)).alias("scan_overhead"),
-        F.sum(F.when(is_data, 1).otherwise(0)).alias("data_file_count"),
-        F.coalesce(F.sum(F.when(is_data, size)), F.lit(0)).alias("data_size"),
+        *[F.expr(e) for e in _before_sql(size_col, content_col)]
     )
-
-
-_PART_AFTER_SCHEMA = (
-    "partition_key string, file_count long, total_size long,"
-    " scan_overhead long, data_file_count long, data_size long,"
-    " after_file_count long, after_scan_overhead long"
-)
 
 
 def partition_stats_with_after(
@@ -96,16 +99,11 @@ def partition_stats_with_after(
     files are all deletes get 0 groups (reference packs an empty list).
 
     Plan shape: ONE scan → ONE exchange on the partition key → one
-    grouped-map pass computing both BEFORE aggregates (vectorized
-    numpy sums) and the pack simulation. Round 1 ran BEFORE and AFTER
-    as separate relational branches; Catalyst pushes filters/pruning
-    through the shared repartition, so the branches never reuse the
-    exchange and the source was scanned (and shuffled) twice — the
-    dominant cost in the round-1 bench. Fusing halves the I/O and
-    removes the before↔after join entirely. The pack fold itself is
-    O(#groups · log n) via prefix sums + searchsorted rather than a
-    per-row Python loop (semantics pinned against pack_sizes by
-    tests/test_binpack.py and the golden suite).
+    hash aggregate computing the BEFORE sums and
+    ``array_sort(collect_list(DATA size))``, then the ``aggregate()``
+    fold over that array in the projection above it. Separate BEFORE
+    and AFTER branches would scan and shuffle the source twice
+    (Catalyst reuses no exchange across them) and need a join.
 
     Output: one row per partition — (partition_key, file_count,
     total_size, scan_overhead, data_file_count, data_size,
@@ -116,193 +114,119 @@ def partition_stats_with_after(
     metadata is one unioned relation and Spark schedules all tables'
     partitions as one job).
     """
-    import numpy as np
-    import pandas as pd
-
-    fetch = FETCH_SIZE
-    cap = MAX_GROUP_BYTE_SIZE
-    ms = MILLISECONDS_PER_SCAN
-    group_cols = ([table_col] if table_col else []) + [partition_col]
-
-    def _stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        sizes = pdf[size_col].to_numpy(dtype="int64")
-        content = pdf[content_col].to_numpy()
-        file_count = int(sizes.size)
-        total_size = int(sizes.sum())
-        scan_overhead = int((sizes // fetch + 2).sum()) * ms
-        data = sizes[content == CONTENT_DATA]
-        dfc = int(data.size)
-        dsz = int(data.sum())
-        groups, cost = pack_group_stats(data, cap)
-        aoh = cost * ms
-        key_vals = [pdf[c].iloc[0] for c in group_cols]
-        return pd.DataFrame(
-            [
-                key_vals
-                + [
-                    file_count,
-                    total_size,
-                    scan_overhead,
-                    dfc,
-                    dsz,
-                    groups,
-                    aoh,
-                ]
-            ],
-            columns=(
-                ([table_col] if table_col else [])
-                + [
-                    "partition_key",
-                    "file_count",
-                    "total_size",
-                    "scan_overhead",
-                    "data_file_count",
-                    "data_size",
-                    "after_file_count",
-                    "after_scan_overhead",
-                ]
-            ),
-        )
-
-    schema = _PART_AFTER_SCHEMA
-    if table_col:
-        schema = f"{table_col} string, " + schema
-    cols = files.select(
-        *[F.col(c) for c in group_cols],
-        F.col(size_col),
-        F.col(content_col),
+    keys = [table_col] if table_col else []
+    sizes = (
+        f"array_sort(collect_list(IF({content_col} = {CONTENT_DATA},"
+        f" CAST({size_col} AS BIGINT), NULL))) AS sizes"
     )
-    return cols.groupBy(*group_cols).applyInPandas(_stats, schema=schema)
+    cols = keys + [
+        "partition_key", "file_count", "total_size", "scan_overhead",
+        "data_file_count", "data_size",
+    ]
+    return (
+        files.groupBy(*keys, F.col(partition_col).alias("partition_key"))
+        .agg(*[F.expr(e) for e in _before_sql(size_col, content_col) + [sizes]])
+        .selectExpr(*cols, f"{pack_fold_sql('sizes')} AS packed")
+        .selectExpr(
+            *cols,
+            "packed.groups AS after_file_count",
+            f"packed.cost * {_MS} AS after_scan_overhead",
+        )
+    )
+
+
+def _worst_sql(name: str, before: str, after: str) -> str:
+    red = f"{before} - {after}"
+    return (
+        f"max(IF({red} > 0, named_struct('red', {red}, 'before', {before},"
+        f" 'after', {after}), NULL)) AS worst_{name}"
+    )
+
+
+# Second-level aggregation over per-partition rows (A2-A7 + the A10
+# argmax), per table on the multi-table path. worst = min per-partition
+# average over ALL files (deletes included —
+# PartitionMetrics.average_file_size, :32-34).
+#
+# Argmax by reduction (A10, table_metrics.py:134-153): track the
+# partition with max (before - after) reduction; only reductions
+# strictly > 0 qualify (initial max is 0). max() over a struct orders
+# lexicographically — reduction first — so one aggregate replaces the
+# reference's sequential scan. Ties: the reference takes first-seen
+# (dict order); we break by larger before value, deterministic under
+# any partitioning.
+_PER_TABLE_SQL = [
+    "coalesce(sum(file_count), 0) AS file_count",
+    "coalesce(sum(total_size), 0) AS total_size",
+    "coalesce(sum(scan_overhead), 0) AS scan_overhead_sum",
+    "coalesce(sum(data_file_count), 0) AS data_file_count",
+    "coalesce(sum(data_size), 0) AS data_size",
+    "count(*) AS total_partitions",
+    "coalesce(min(total_size / file_count), 0D) AS worst_avg_file_size",
+    "coalesce(max(total_size), 0) AS largest_partition_size",
+    "coalesce(sum(after_file_count), 0) AS after_file_count",
+    "coalesce(sum(after_scan_overhead), 0) AS after_full_scan_overhead",
+    _worst_sql("fc", "file_count", "after_file_count"),
+    _worst_sql("oh", "scan_overhead", "after_scan_overhead"),
+]
 
 
 def _aggregate_per_part(per_part: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Second-level aggregation over per-partition rows (A2-A7 + the
-    A10 argmax), optionally grouped by table for the multi-table
-    single-job path. The manifest term of FULL_SCAN_OVERHEAD is added
-    by the caller (it is per-table external state, not derivable from
-    the files relation).
+    """Per-table stats from per-partition rows. The manifest term of
+    FULL_SCAN_OVERHEAD is added by _nine_metric_rows (it is per-table
+    external state, not derivable from the files relation)."""
+    return per_part.groupBy(*group_cols).agg(*[F.expr(e) for e in _PER_TABLE_SQL])
 
-    Argmax by reduction (A10, table_metrics.py:134-153): track the
-    partition with max (before - after) reduction; only reductions
-    strictly > 0 qualify (initial max is 0). max() over a struct
-    orders lexicographically — reduction first — so one aggregate
-    replaces the reference's sequential scan. Ties: the reference
-    takes first-seen (dict order); we break by larger before value,
-    deterministic under any partitioning.
-    """
-    fc_red = F.col("file_count") - F.col("after_file_count")
-    oh_red = F.col("scan_overhead") - F.col("after_scan_overhead")
 
-    base = per_part.groupBy(*group_cols) if group_cols else per_part
-    return base.agg(
-        F.coalesce(F.sum("file_count"), F.lit(0)).alias("file_count"),
-        F.coalesce(F.sum("total_size"), F.lit(0)).alias("total_size"),
-        F.coalesce(F.sum("scan_overhead"), F.lit(0)).alias("scan_overhead_sum"),
-        F.coalesce(F.sum("data_file_count"), F.lit(0)).alias("data_file_count"),
-        F.coalesce(F.sum("data_size"), F.lit(0)).alias("data_size"),
-        F.count("*").alias("total_partitions"),
-        # worst = min per-partition average over ALL files (deletes
-        # included — PartitionMetrics.average_file_size, :32-34).
-        F.coalesce(
-            F.min(F.col("total_size") / F.col("file_count")), F.lit(0.0)
-        ).alias("worst_avg_file_size"),
-        F.coalesce(F.max("total_size"), F.lit(0)).alias("largest_partition_size"),
-        F.coalesce(F.sum("after_file_count"), F.lit(0)).alias("after_file_count"),
-        F.coalesce(F.sum("after_scan_overhead"), F.lit(0)).alias(
-            "after_full_scan_overhead"
-        ),
-        F.max(
-            F.when(
-                fc_red > 0,
-                F.struct(
-                    fc_red.alias("red"),
-                    F.col("file_count").alias("before"),
-                    F.col("after_file_count").alias("after"),
-                ),
-            )
-        ).alias("worst_fc"),
-        F.max(
-            F.when(
-                oh_red > 0,
-                F.struct(
-                    oh_red.alias("red"),
-                    F.col("scan_overhead").alias("before"),
-                    F.col("after_scan_overhead").alias("after"),
-                ),
-            )
-        ).alias("worst_oh"),
-    )
+# (before, after) SQL per metric; {m} is the per-table manifest count.
+# Metrics without a local-mode "after" (table_metric.py:86-96) carry
+# NULL after → NULL improvement.
+_METRIC_SQL = {
+    "FULL_SCAN_OVERHEAD": (
+        f"scan_overhead_sum + {{m}} * {_MS}", "after_full_scan_overhead"
+    ),
+    "WORST_SCAN_OVERHEAD": (
+        "coalesce(worst_oh.before, 0)", "coalesce(worst_oh.after, 0)"
+    ),
+    "FILE_COUNT": ("file_count", "after_file_count"),
+    "WORST_FILE_COUNT": (
+        "coalesce(worst_fc.before, 0)", "coalesce(worst_fc.after, 0)"
+    ),
+    "AVG_FILE_SIZE": (
+        "IF(data_file_count > 0, data_size / data_file_count, 0D)", None
+    ),
+    "WORST_AVG_FILE_SIZE": ("worst_avg_file_size", None),
+    "TOTAL_TABLE_SIZE": ("total_size", None),
+    "LARGEST_PARTITION_SIZE": ("largest_partition_size", None),
+    "TOTAL_PARTITIONS": ("total_partitions", None),
+}
 
-def _nine_metric_rows(g: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Unpivot the aggregated stats (with full_scan_overhead already
-    including the manifest term) into the 9-row metric layout, with
-    improvement (A11). key_cols pass through (empty for single-table,
+# Improvement (A11, table_metric.py:67-70): (1 - after/before)*100; 0
+# when both are 0; +inf when before is 0 but after isn't; NULL when
+# there is no after value.
+_IMPROVEMENT_SQL = (
+    "CASE WHEN after IS NULL THEN NULL"
+    " WHEN before = 0 AND after = 0 THEN 0D"
+    " WHEN before = 0 THEN CAST('Infinity' AS DOUBLE)"
+    " ELSE (1D - after / before) * 100D END AS improvement"
+)
+
+
+def _nine_metric_rows(g: DataFrame, key_cols: list[str], manifests: str) -> DataFrame:
+    """Unpivot the per-table stats into the 9-row metric layout with
+    improvement (A11); ``manifests`` is SQL for the table's manifest
+    count. key_cols pass through (empty for single-table,
     ["table_name"] for the multi-table job)."""
-    g = g.select(
-        "*",
-        (F.col("data_size") / F.col("data_file_count")).alias("_avg_raw"),
-        F.coalesce(F.col("worst_fc.before"), F.lit(0)).alias("worst_file_count"),
-        F.coalesce(F.col("worst_fc.after"), F.lit(0)).alias("after_worst_file_count"),
-        F.coalesce(F.col("worst_oh.before"), F.lit(0)).alias("worst_scan_overhead"),
-        F.coalesce(F.col("worst_oh.after"), F.lit(0)).alias(
-            "after_worst_scan_overhead"
-        ),
-    ).withColumn(
-        "avg_file_size",
-        F.when(F.col("data_file_count") > 0, F.col("_avg_raw")).otherwise(F.lit(0.0)),
+    structs = ", ".join(
+        f"named_struct('metric', '{key}', 'ordinal', {i},"
+        f" 'before', CAST({_METRIC_SQL[key][0].format(m=manifests)} AS DOUBLE),"
+        f" 'after', CAST({_METRIC_SQL[key][1] or 'NULL'} AS DOUBLE))"
+        for i, (key, _display) in enumerate(METRICS)
     )
-
-    # Unpivot to the 9-row metric layout. Metrics without a local-mode
-    # "after" (table_metric.py:86-96) carry NULL after → NULL improvement.
-    pairs = []
-    after_map = {
-        "FULL_SCAN_OVERHEAD": "after_full_scan_overhead",
-        "WORST_SCAN_OVERHEAD": "after_worst_scan_overhead",
-        "FILE_COUNT": "after_file_count",
-        "WORST_FILE_COUNT": "after_worst_file_count",
-    }
-    before_map = {
-        "FULL_SCAN_OVERHEAD": "full_scan_overhead",
-        "WORST_SCAN_OVERHEAD": "worst_scan_overhead",
-        "FILE_COUNT": "file_count",
-        "WORST_FILE_COUNT": "worst_file_count",
-        "AVG_FILE_SIZE": "avg_file_size",
-        "WORST_AVG_FILE_SIZE": "worst_avg_file_size",
-        "TOTAL_TABLE_SIZE": "total_size",
-        "LARGEST_PARTITION_SIZE": "largest_partition_size",
-        "TOTAL_PARTITIONS": "total_partitions",
-    }
-    for ordinal, (key, _display) in enumerate(METRICS):
-        before = F.col(before_map[key]).cast("double")
-        after = (
-            F.col(after_map[key]).cast("double")
-            if key in after_map
-            else F.lit(None).cast("double")
-        )
-        pairs.append(
-            F.struct(
-                F.lit(key).alias("metric"),
-                F.lit(ordinal).alias("ordinal"),
-                before.alias("before"),
-                after.alias("after"),
-            )
-        )
-
-    rows = g.select(
-        *key_cols, F.explode(F.array(*pairs)).alias("m")
-    ).select(*key_cols, "m.*")
-
-    # Improvement (A11, table_metric.py:67-70): (1 - after/before)*100;
-    # 0 when both are 0; +inf when before is 0 but after isn't; NULL
-    # when there is no after value.
-    improvement = (
-        F.when(F.col("after").isNull(), F.lit(None).cast("double"))
-        .when((F.col("before") == 0) & (F.col("after") == 0), F.lit(0.0))
-        .when(F.col("before") == 0, F.lit(float("inf")))
-        .otherwise((F.lit(1.0) - F.col("after") / F.col("before")) * 100.0)
-    )
-    return rows.withColumn("improvement", improvement).orderBy(
-        *key_cols, "ordinal"
+    return (
+        g.selectExpr(*key_cols, f"inline(array({structs}))")
+        .selectExpr(*key_cols, "metric", "ordinal", "before", "after", _IMPROVEMENT_SQL)
+        .orderBy(*key_cols, "ordinal")
     )
 
 
@@ -313,13 +237,8 @@ def table_metrics(files: DataFrame, manifest_files_count: int = 0) -> DataFrame:
     Output: (metric string, ordinal int, before double, after double
     nullable, improvement double nullable) — 9 rows.
     """
-    per_part = partition_stats_with_after(files)
-    g = _aggregate_per_part(per_part, []).withColumn(
-        "full_scan_overhead",
-        F.col("scan_overhead_sum")
-        + F.lit(manifest_files_count * MILLISECONDS_PER_SCAN),
-    )
-    return _nine_metric_rows(g, [])
+    g = _aggregate_per_part(partition_stats_with_after(files), [])
+    return _nine_metric_rows(g, [], str(int(manifest_files_count)))
 
 
 def multi_table_metrics(
@@ -335,19 +254,12 @@ def multi_table_metrics(
 
     Output: 9 metric rows per table, keyed by table_name. Scale
     shape: one exchange on (table, partition) feeds the fused
-    stats+pack pass, one tiny per-table aggregate follows — 1000
+    stats+pack aggregate, one tiny per-table aggregate follows — 1000
     tables schedule as ordinary partitions of one job, not 1000
     sequential jobs.
     """
     per_part = partition_stats_with_after(files, table_col=table_col)
-    g = (
-        _aggregate_per_part(per_part, [table_col])
-        .join(F.broadcast(manifest_counts), table_col, "left")
-        .withColumn(
-            "full_scan_overhead",
-            F.col("scan_overhead_sum")
-            + F.coalesce(F.col("manifest_count"), F.lit(0))
-            * MILLISECONDS_PER_SCAN,
-        )
+    g = _aggregate_per_part(per_part, [table_col]).join(
+        F.broadcast(manifest_counts), table_col, "left"
     )
-    return _nine_metric_rows(g, [table_col])
+    return _nine_metric_rows(g, [table_col], "coalesce(manifest_count, 0)")

@@ -11,13 +11,14 @@ table_metrics_displayer.py:26-46):
 - WORST_AVG_FILE_SIZE is hidden in local mode;
 - missing after → empty strings.
 
-Everything is column expressions (format ladders), so the display
-transform itself distributes.
+Everything is one select of SQL-text CASE ladders (a few py4j calls
+per panel), so the display transform itself distributes. Metric keys
+are interpolated verbatim: they are this module's constants.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from iceberg_diag_spark.functions.formatting import (
     format_duration_ms,
@@ -40,47 +41,42 @@ REMOTE_ONLY_METRICS = ["WORST_AVG_FILE_SIZE"]
 _DISPLAY_NAMES = dict(METRICS)
 
 
+def _sql_list(values) -> str:
+    return ", ".join(f"'{v}'" for v in values)
+
+
+_IS_DURATION = f"metric IN ({_sql_list(DURATION_METRICS)})"
+_NAME_SQL = (
+    "CASE metric"
+    + "".join(f" WHEN '{k}' THEN '{d}'" for k, d in _DISPLAY_NAMES.items())
+    + " ELSE metric END AS metric_name"
+)
+_IMPROVEMENT_SQL = (
+    f"CASE WHEN metric IN ({_sql_list(NO_IMPROVEMENT_METRICS)}) THEN ''"
+    " WHEN improvement IS NULL THEN ''"
+    f" WHEN {_IS_DURATION} AND before < 10 AND after < 10 THEN '0.00%'"
+    f" ELSE {format_percent('improvement')} END AS improvement"
+)
+
+
+def _value_sql(col: str) -> str:
+    return (
+        f"CASE WHEN {col} IS NULL THEN ''"
+        f" WHEN {_IS_DURATION} THEN {format_duration_ms(col)}"
+        f" WHEN metric IN ({_sql_list(INT_METRICS)})"
+        f" THEN CAST(CAST({col} AS BIGINT) AS STRING)"
+        f" ELSE {format_size(col)} END AS {col}"
+    )
+
+
 def format_metrics(metrics: DataFrame, mode: str = "local") -> DataFrame:
     """(metric, ordinal, before, after, improvement) → formatted
     display rows (metric_name, before, after, improvement strings)."""
-    is_duration = F.col("metric").isin(DURATION_METRICS)
-    is_int = F.col("metric").isin(INT_METRICS)
-
-    def fmt(value):
-        return (
-            F.when(value.isNull(), F.lit(""))
-            .when(is_duration, format_duration_ms(value))
-            .when(is_int, value.cast("long").cast("string"))
-            .otherwise(format_size(value))
-        )
-
-    improvement = (
-        F.when(F.col("metric").isin(NO_IMPROVEMENT_METRICS), F.lit(""))
-        .when(F.col("improvement").isNull(), F.lit(""))
-        .when(
-            is_duration & (F.col("before") < 10) & (F.col("after") < 10),
-            F.lit("0.00%"),
-        )
-        .otherwise(format_percent(F.col("improvement")))
-    )
-
-    name_expr = F.col("metric")
-    for key, display in _DISPLAY_NAMES.items():
-        name_expr = F.when(F.col("metric") == key, F.lit(display)).otherwise(
-            name_expr
-        )
-
-    out = metrics.select(
-        F.col("ordinal"),
-        name_expr.alias("metric_name"),
-        fmt(F.col("before")).alias("before"),
-        fmt(F.col("after")).alias("after"),
-        improvement.alias("improvement"),
+    out = metrics.selectExpr(
+        "ordinal", _NAME_SQL, _value_sql("before"), _value_sql("after"),
+        _IMPROVEMENT_SQL,
     )
     if mode == "local":
-        out = out.filter(
-            ~F.col("metric_name").isin(
-                [_DISPLAY_NAMES[m] for m in REMOTE_ONLY_METRICS]
-            )
-        )
+        hidden = [_DISPLAY_NAMES[m] for m in REMOTE_ONLY_METRICS]
+        out = out.where(f"metric_name NOT IN ({_sql_list(hidden)})")
     return out.orderBy("ordinal").drop("ordinal")

@@ -60,7 +60,8 @@ def get_spark(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD", "128m"),
         )
-        # Arrow for pandas UDF exchange (bin-pack, multimodal plumbing).
+        # Arrow for pandas UDF exchange (binpack_groups, sequence
+        # packing, multimodal plumbing; the diagnostics panel uses none).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Keep broadcast threshold at default 10MB; dims here are tiny.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

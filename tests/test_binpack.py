@@ -1,6 +1,6 @@
 """Bin-packing semantics: check-before-append, ascending sort,
 group-exceeds-cap — property-tested against a hand fold, plus a Spark
-roundtrip of the grouped-map UDF.
+roundtrip of the grouped-map UDF and of the SQL aggregate() fold.
 """
 
 from __future__ import annotations
@@ -76,34 +76,67 @@ def test_spark_binpack_matches_local(spark):
     )
 
 
-@given(
-    st.lists(
-        st.one_of(
-            st.integers(min_value=0, max_value=2_000 * 1024 * 1024),
-            # adversarial: exact cap multiples and off-by-one sizes
-            st.sampled_from(
-                [
-                    0,
-                    1,
-                    MAX_GROUP_BYTE_SIZE,
-                    MAX_GROUP_BYTE_SIZE - 1,
-                    MAX_GROUP_BYTE_SIZE + 1,
-                ]
-            ),
-        ),
-        max_size=200,
-    )
+_ADVERSARIAL_SIZE = st.one_of(
+    st.integers(min_value=0, max_value=2_000 * MIB),
+    # adversarial: exact cap multiples and off-by-one sizes
+    st.sampled_from(
+        [
+            0,
+            1,
+            MAX_GROUP_BYTE_SIZE - 1,
+            MAX_GROUP_BYTE_SIZE,
+            MAX_GROUP_BYTE_SIZE + 1,
+        ]
+    ),
 )
-def test_pack_group_stats_equals_reference_fold(sizes):
-    """The O(#groups log n) searchsorted fold used by the fused
-    diagnostics pass must agree with the reference check-before-append
-    fold on group count AND total read cost for any input, including
-    zero sizes and cap-exact boundaries."""
-    from iceberg_diag_spark.functions.cost import FETCH_SIZE
-    from iceberg_diag_spark.operators.binpack import pack_group_stats
 
-    groups = pack_sizes(sizes)
-    want_cost = sum(total // FETCH_SIZE + 2 for _, total in groups)
-    got_groups, got_cost = pack_group_stats(sizes)
-    assert got_groups == len(groups)
-    assert got_cost == want_cost
+# Every batch also carries these partitions: all deletes (no DATA file
+# to pack), a NULL partition key, one DATA file larger than the cap.
+_FIXED_PARTITIONS = {
+    "all_deletes": [(MAX_GROUP_BYTE_SIZE + 1, 1), (5, 2)],
+    None: [(MAX_GROUP_BYTE_SIZE - 1, 0), (MAX_GROUP_BYTE_SIZE, 0), (3, 1)],
+    "one_big": [(3 * MAX_GROUP_BYTE_SIZE, 0)],
+}
+
+
+def test_sql_fold_equals_reference_fold(spark):
+    """The diagnostics panel's SQL aggregate() fold (per-partition
+    sorted DATA sizes, binpack.pack_fold_sql) must agree with the
+    reference check-before-append fold on group count AND total read
+    cost for any input, including zero sizes and cap-exact boundaries.
+    Each example packs a whole batch of partitions into one DataFrame,
+    so the property costs one Spark job per example."""
+    from iceberg_diag_spark.functions.cost import FETCH_SIZE, MILLISECONDS_PER_SCAN
+    from iceberg_diag_spark.operators.diagnostics import partition_stats_with_after
+    from iceberg_diag_spark.sources.data_files import FILES_SCHEMA
+
+    @given(
+        st.lists(
+            st.lists(
+                st.tuples(_ADVERSARIAL_SIZE, st.sampled_from([0, 0, 0, 1, 2])),
+                min_size=1,
+                max_size=60,
+            ),
+            min_size=1,
+            max_size=25,
+        )
+    )
+    @settings(max_examples=15, deadline=None)
+    def check(generated):
+        parts = {f"p{i}": files for i, files in enumerate(generated)}
+        parts.update(_FIXED_PARTITIONS)
+        rows = [(k, size, c) for k, files in parts.items() for size, c in files]
+        got = {
+            r["partition_key"]: (r["after_file_count"], r["after_scan_overhead"])
+            for r in partition_stats_with_after(
+                spark.createDataFrame(rows, FILES_SCHEMA)
+            ).collect()
+        }
+        want = {}
+        for k, files in parts.items():
+            groups = pack_sizes([size for size, c in files if c == 0])
+            cost = sum(total // FETCH_SIZE + 2 for _, total in groups)
+            want[k] = (len(groups), cost * MILLISECONDS_PER_SCAN)
+        assert got == want
+
+    check()

@@ -50,8 +50,8 @@ from iceberg_diag_spark.sources.response import (
     ],
 )
 def test_format_size(spark, value, expected):
-    row = spark.range(1).select(
-        format_size(F.lit(float(value))).alias("s")
+    row = spark.range(1).select(F.lit(float(value)).alias("v")).select(
+        F.expr(format_size("v")).alias("s")
     ).first()
     assert row["s"] == expected
 
@@ -69,15 +69,15 @@ def test_format_size(spark, value, expected):
     ],
 )
 def test_format_duration(spark, ms, expected):
-    row = spark.range(1).select(
-        format_duration_ms(F.lit(ms)).alias("s")
+    row = spark.range(1).select(F.lit(ms).alias("v")).select(
+        F.expr(format_duration_ms("v")).alias("s")
     ).first()
     assert row["s"] == expected
 
 
 def test_format_percent(spark):
-    row = spark.range(1).select(
-        format_percent(F.lit(99.005)).alias("s")
+    row = spark.range(1).select(F.lit(99.005).alias("v")).select(
+        F.expr(format_percent("v")).alias("s")
     ).first()
     assert row["s"] == "99.01%"
 

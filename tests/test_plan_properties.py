@@ -75,11 +75,11 @@ def test_minhash_no_python_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_diag_metrics_python_only_for_binpack(spark):
+def test_diag_metrics_python_free(spark):
     plan = _plan(spark, "diag_metrics")
-    # exactly one pandas stage: the fused before-stats + bin-pack fold
-    assert _op_count(plan, "FlatMapGroupsInPandas") == 1
-    assert "BatchEvalPython" not in plan  # no row-at-a-time Python
+    # the bin-pack fold is a SQL aggregate() over each partition's
+    # sorted DATA sizes: no pandas stage, no Python of any kind
+    assert "Python" not in plan
     # single-pass: the files relation is scanned exactly once (round 1
     # had separate BEFORE and AFTER branches scanning it twice)
     assert _op_count(plan, "Scan parquet") == 1
@@ -367,6 +367,10 @@ _BOUNDED_COLLECT_OK = {
     #   the doc_repetition_profile sorted-array fold idiom
     "events_holt_forecast",   # same per-type hourly series collect
     #   (metadata scale), Holt level+trend fold
+    "diag_metrics",  # one list of DATA file sizes per partition for
+    "diag_metrics_multi_table",  # the SQL bin-pack fold: metadata scale,
+    #   the same per-group set the pandas fold held in memory; the JVM
+    #   buffer is boxed, so a 10^6-file partition costs ~16-24 MB
     "unigram_lm_encode",  # per-word-form span collect: list length
     #   bounded by max_word_len x max_piece_len (96), never corpus-
     #   cardinality (the trainer's own E-step shape — hidden there
